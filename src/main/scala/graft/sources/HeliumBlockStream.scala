@@ -4,8 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -48,10 +46,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    found by the st09 capstone kill/restart spec.)
   *  - `planInputPartitions(start, end)` slices the (start, end] height
   *    range into `numPartitions` contiguous chunks; each task fetches
-  *    its blocks + txn payloads EXECUTOR-side with its own client
-  *    (RpcTxnSource.fetchRangeBulk's fan-out shape) under the T4
-  *    retry-then-skip policy. At 1000 executors the node is the
-  *    bottleneck, which is where it belongs.
+  *    its blocks + txn payloads EXECUTOR-side with its own client,
+  *    through the same block expansion as the serial path
+  *    ([[JsonRpcClient.blockTxns]], T4 retry-then-skip). At 1000
+  *    executors the node is the bottleneck, which is where it belongs;
+  *    `numPartitions` caps the fan-out the node sees.
   *  - Exactly-once: heights are immutable and the range is half-open,
   *    so a replayed batch re-reads exactly the same blocks; the
   *    downstream content-key sinks (T5) make re-delivery idempotent.
@@ -198,34 +197,21 @@ final class HeliumBlockReaderFactory extends PartitionReaderFactory {
   }
 }
 
-/** Executor-side reader: its own client + mapper per task (the
-  * fetchRangeBulk discipline — no closure capture, isolated
-  * connections), streaming block→txn→payload expansion under T4
-  * retry-then-skip. Heights the node doesn't serve produce no rows.
+/** Executor-side reader: its own client per task (no closure
+  * capture, isolated connections), streaming the
+  * [[JsonRpcClient.blockTxns]] expansion one row at a time. Heights
+  * the node doesn't serve produce no rows.
   */
 final class HeliumBlockPartitionReader(p: HeliumBlockInputPartition)
     extends PartitionReader[InternalRow] {
   private val client = new JsonRpcClient(p.endpoint)
-  private val mapper = new ObjectMapper
   private val rows: Iterator[InternalRow] =
     ((p.fromExclusive + 1) to p.toInclusive).iterator.flatMap { h =>
-      client.blockGet(h).iterator.flatMap { blockJson =>
-        val block = mapper.readTree(blockJson)
-        val height = block.get("height").asLong()
-        val time = block.get("time").asLong()
-        val txns = block.get("transactions")
-        (0 until txns.size()).iterator.flatMap { i =>
-          val hash = txns.get(i).get("hash").asText()
-          val tpe = txns.get(i).get("type").asText()
-          val (payload, _) = RetryPolicy.withRetries(p.maxRetries,
-            p.sleepMs)(() => client.transactionGet(hash))
-          payload.map(pl => new GenericInternalRow(Array[Any](
-            height, time, UTF8String.fromString(hash),
-            UTF8String.fromString(tpe), UTF8String.fromString(pl)))
-            : InternalRow).iterator
-        }
-      }
-    }
+      JsonRpcClient.blockTxns(client, h, p.maxRetries, p.sleepMs,
+        Thread.sleep(_)).getOrElse(Iterator.empty)
+    }.map(t => new GenericInternalRow(Array[Any](t.block, t.blockTime,
+      UTF8String.fromString(t.hash), UTF8String.fromString(t.tpe),
+      UTF8String.fromString(t.payload))))
   private var current: InternalRow = _
   override def next(): Boolean =
     if (rows.hasNext) { current = rows.next(); true } else false

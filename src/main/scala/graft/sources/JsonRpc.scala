@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -15,13 +17,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * throws. The HTTP transport is injectable so specs can run against
   * an in-process stub server — or fail deterministically.
   *
-  * This client is DRIVER-side by design: the reference's own loop is a
-  * single poll cursor (follower.py:55-75), and the engine's scale axis
-  * is the transform/sink side (executors), not block fetch — a chain
-  * tip advances one block at a time regardless of cluster size. For
-  * bulk BACKFILL at scale the same calls fan out from executors
-  * (heights DataFrame + mapPartitions over this client), which needs
-  * no new semantics.
+  * The serial follower drives one client from the driver, like the
+  * reference's own single poll cursor (follower.py:55-75); a chain tip
+  * advances one block at a time regardless of cluster size. For bulk
+  * BACKFILL at scale the same calls fan out from executors, one client
+  * per HeliumBlockStream partition, through the same
+  * [[JsonRpcClient.blockTxns]] expansion.
   */
 final class JsonRpcClient(endpoint: String,
                           post: (String, String) => String =
@@ -74,7 +75,39 @@ final class JsonRpcClient(endpoint: String,
     call("transaction_get", Map("hash" -> hash))
 }
 
+/** One transaction of a fetched block, in txnEnvelope column order. */
+final case class BlockTxn(block: Long, blockTime: Long, hash: String,
+                          tpe: String, payload: String)
+
 object JsonRpcClient {
+  private val mapper = new ObjectMapper
+
+  /** The follower loop's fetch step for one height (follower.py:55-69):
+    * block_get, then transaction_get for every listed txn under the T4
+    * retry-then-skip policy — a payload still missing after
+    * `maxRetries` retries is dropped and the block moves on. None when
+    * the node does not serve the height (−100); otherwise a LAZY
+    * iterator, so each payload RPC runs when the caller pulls its txn.
+    * The one expansion behind both the serial RpcTxnSource and the
+    * executor-side HeliumBlockPartitionReader.
+    */
+  def blockTxns(client: JsonRpcClient, height: Long, maxRetries: Int,
+                sleepMs: Long, sleep: Long => Unit)
+      : Option[Iterator[BlockTxn]] =
+    client.blockGet(height).map { blockJson =>
+      val block = mapper.readTree(blockJson)
+      val h = block.get("height").asLong()
+      val time = block.get("time").asLong()
+      val txns = block.get("transactions")
+      (0 until txns.size()).iterator.flatMap { i =>
+        val hash = txns.get(i).get("hash").asText()
+        val (payload, _) = RetryPolicy.withRetries(maxRetries, sleepMs,
+          sleep)(() => client.transactionGet(hash))
+        payload.map(
+          BlockTxn(h, time, hash, txns.get(i).get("type").asText(), _))
+      }
+    }
+
   /** Default transport: JDK HttpClient, synchronous POST. */
   def httpPost(endpoint: String, body: String): String = {
     val client = HttpClient.newHttpClient()
@@ -91,96 +124,27 @@ object JsonRpcClient {
   * policy — a payload the node hasn't indexed yet is retried
   * `maxRetries` times then SKIPPED, follower.py:58-69), and hands the
   * engine the same envelope DataFrame the fixture source produces —
-  * the S1/S2 seam closed with a real client.
+  * the S1/S2 seam closed with a real client. Serial tail-follow path
+  * (one cursor, like the reference's own loop); large backfills fan
+  * out through HeliumBlockStream's executor-side reader.
   */
 final class RpcTxnSource(client: JsonRpcClient, maxRetries: Int = 50,
                          sleepMs: Long = 10000L,
                          sleep: Long => Unit = Thread.sleep)
     extends TxnSource {
-  private val mapper = new ObjectMapper
 
   def fetchRange(spark: SparkSession, fromExclusive: Long,
                  toInclusive: Long): Option[DataFrame] = {
-    // Serial tail-follow path (one cursor, like the reference's own
-    // loop). Large backfills go through RpcTxnSource.fetchRangeBulk.
-    val rows = Seq.newBuilder[Row]
-    var sawBlock = false
-    var h = fromExclusive + 1
-    while (h <= toInclusive) {
-      client.blockGet(h).foreach { blockJson =>
-        sawBlock = true
-        val block = mapper.readTree(blockJson)
-        val height = block.get("height").asLong()
-        val time = block.get("time").asLong()
-        val txns = block.get("transactions")
-        (0 until txns.size()).foreach { i =>
-          val hash = txns.get(i).get("hash").asText()
-          val tpe = txns.get(i).get("type").asText()
-          val (payload, _) = RetryPolicy.withRetries(maxRetries, sleepMs,
-            sleep)(() => client.transactionGet(hash))
-          // exhausted retries → skip the txn, advance (T1/T4)
-          payload.foreach { p =>
-            rows += Row(height, time, hash, tpe, p)
-          }
-        }
-      }
-      h += 1
-    }
-    if (!sawBlock && rows.result().isEmpty) None
+    // each block's txns are drained before the next block_get, the
+    // reference loop's RPC order
+    val blocks = ((fromExclusive + 1) to toInclusive).flatMap(h =>
+      JsonRpcClient.blockTxns(client, h, maxRetries, sleepMs, sleep)
+        .map(_.toVector))
+    // no block seen → None (chain tip not reached)
+    if (blocks.isEmpty) None
     else Some(spark.createDataFrame(
-      java.util.Arrays.asList(rows.result(): _*),
+      blocks.flatten.map(t =>
+        Row(t.block, t.blockTime, t.hash, t.tpe, t.payload)).asJava,
       HeliumSchemas.txnEnvelope))
-  }
-}
-
-object RpcTxnSource {
-  /** EXECUTOR-side bulk backfill — the scale path the driver-side
-    * fetchRange deliberately doesn't take (its serial loop mirrors the
-    * reference's own cursor, follower.py:55-75, and is fine per batch;
-    * a 1M-block backfill through it would be driver-bound). The height
-    * range becomes `numPartitions` slices of a range DataFrame; each
-    * partition constructs its OWN client via `mkClient` (the client
-    * holds an ObjectMapper and a transport — per-partition construction
-    * instead of closure capture keeps the lambda serializable and
-    * gives each task an isolated connection) and streams its heights
-    * through the same block→txn→payload expansion and T4
-    * retry-then-skip policy as the serial path. Output: the same
-    * txn-envelope schema; heights the node doesn't have yet simply
-    * produce no rows (a backfill runs below the tip by construction).
-    *
-    * At 1000 executors this is embarrassingly parallel — the node side
-    * is the bottleneck, which is where it belongs; `numPartitions`
-    * is the knob that caps the fan-out the node sees.
-    */
-  def fetchRangeBulk(spark: SparkSession, mkClient: () => JsonRpcClient,
-                     fromExclusive: Long, toInclusive: Long,
-                     numPartitions: Int, maxRetries: Int = 50,
-                     sleepMs: Long = 10000L,
-                     sleep: Long => Unit = Thread.sleep): DataFrame = {
-    val heights = spark.range(fromExclusive + 1, toInclusive + 1, 1L,
-      numPartitions)
-    val rows = heights.rdd.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        val client = mkClient()
-        val mapper = new ObjectMapper
-        it.flatMap { h =>
-          client.blockGet(h).iterator.flatMap { blockJson =>
-            val block = mapper.readTree(blockJson)
-            val height = block.get("height").asLong()
-            val time = block.get("time").asLong()
-            val txns = block.get("transactions")
-            (0 until txns.size()).iterator.flatMap { i =>
-              val hash = txns.get(i).get("hash").asText()
-              val tpe = txns.get(i).get("type").asText()
-              val (payload, _) = RetryPolicy.withRetries(maxRetries,
-                sleepMs, sleep)(() => client.transactionGet(hash))
-              payload.map(p => Row(height, time, hash, tpe, p)).iterator
-            }
-          }
-        }
-      }
-    }
-    spark.createDataFrame(rows, HeliumSchemas.txnEnvelope)
   }
 }

@@ -35,25 +35,7 @@ final class Follower(spark: SparkSession, sourceDir: String,
                      batchSize: Long) {
 
   /** T2: read the checkpoint; -1 = never run (backfill from start). */
-  def cursor(): Long = {
-    val p = Paths.get(checkpointPath)
-    if (Files.exists(p))
-      ujsonLong(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-    else -1L
-  }
-
-  private def ujsonLong(s: String): Long =
-    "\"sync_cursor\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(s)
-      .map(_.group(1).toLong)
-      .getOrElse(sys.error(s"bad checkpoint: $s"))
-
-  private def writeCheckpoint(c: Long): Unit = {
-    val tmp = Paths.get(checkpointPath + ".tmp")
-    Files.write(tmp, s"""{"sync_cursor": $c}""".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(checkpointPath),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  def cursor(): Long = Follower.readCursor(checkpointPath)
 
   private def source(): DataFrame =
     spark.read.parquet(s"$sourceDir/events.parquet")
@@ -100,7 +82,7 @@ final class Follower(spark: SparkSession, sourceDir: String,
       transformBatch(batch)
         .write.mode(SaveMode.Overwrite)
         .parquet(s"$sinkDir/batch=$hi")
-      writeCheckpoint(hi)               // checkpoint AFTER sink commit
+      Follower.writeCursor(checkpointPath, hi) // AFTER sink commit
       Some(hi)
     }
   }
@@ -125,6 +107,33 @@ final class Follower(spark: SparkSession, sourceDir: String,
 }
 
 object Follower {
+  private val CursorField = "\"sync_cursor\"\\s*:\\s*(-?\\d+)".r
+
+  /** The `sync_cursor` checkpoint (follower_info analog) at `path`;
+    * -1 when absent (never run).
+    */
+  def readCursor(path: String): Long = {
+    val p = Paths.get(path)
+    if (!Files.exists(p)) -1L
+    else {
+      val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      CursorField.findFirstMatchIn(s).map(_.group(1).toLong)
+        .getOrElse(sys.error(s"bad checkpoint at $path: $s"))
+    }
+  }
+
+  /** Write the checkpoint tmp-then-atomic-move, so a crash leaves
+    * either the old cursor or the new one, never a torn file.
+    */
+  def writeCursor(path: String, c: Long): Unit = {
+    val tmp = Paths.get(path + ".tmp")
+    Files.write(tmp,
+      s"""{"sync_cursor": $c}""".getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** T7 partition drop on any batch=N-partitioned directory (shared by
     * the generic follower's sink and HeliumFollower's per-collection
     * retention). Metadata-only: directories are removed whole.

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-
-import graft.operators.HeliumGraph
 import graft.sinks.GraphSink
 import graft.sources.TxnSource
 
@@ -16,6 +12,10 @@ import graft.sources.TxnSource
   * reference materializes (payments + poc_receipts edges, accounts
   * vertices; follower.py:205-207) idempotently, checkpointing strictly
   * AFTER the sink commit (follower.py:73 ordering).
+  *
+  * The commit itself is [[HeliumStreamFollower.commitBatch]], the same
+  * one the engine-driven follower runs per epoch; this loop owns only
+  * the cursor and the order collections → checkpoint → housekeeping.
   *
   * Same idempotency scheme as the generic Follower (T5): content-hash
   * keys + in-batch dedup + overwrite-by-batch-partition — re-running a
@@ -62,29 +62,12 @@ final class HeliumFollower(spark: SparkSession, source: TxnSource,
   require(maxHeightsPerTrigger.forall(_ > 0),
     s"maxHeightsPerTrigger must be positive; got $maxHeightsPerTrigger")
 
-  def cursor(): Long = {
-    val p = Paths.get(checkpointPath)
-    if (Files.exists(p))
-      "\"sync_cursor\"\\s*:\\s*(-?\\d+)".r
-        .findFirstMatchIn(
-          new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"bad checkpoint: $checkpointPath"))
-    else -1L
-  }
-
-  private def writeCheckpoint(c: Long): Unit = {
-    val tmp = Paths.get(checkpointPath + ".tmp")
-    Files.write(tmp,
-      s"""{"sync_cursor": $c}""".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(checkpointPath),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  def cursor(): Long = Follower.readCursor(checkpointPath)
 
   /** One cursor batch: fetch (c, c+batchSize] capped at `tip`, commit
-    * all three collections, advance the checkpoint. None at the tip or
-    * when the source has nothing for the range (caller polls, T3).
+    * all three collections, advance the checkpoint, then run the
+    * housekeeping. None at the tip or when the source has nothing for
+    * the range (caller polls, T3).
     */
   def step(tip: Long): Option[Long] = {
     val c = cursor()
@@ -93,43 +76,14 @@ final class HeliumFollower(spark: SparkSession, source: TxnSource,
       val stepHeights =
         maxHeightsPerTrigger.fold(batchSize)(math.min(batchSize, _))
       val hi = math.min(c + stepHeights, tip)
-      source.fetchRange(spark, c, hi) match {
-        case None => None
-        case Some(env) =>
-          val payments = HeliumGraph.paymentV1Edges(env)
-            .unionByName(HeliumGraph.paymentV2Edges(env))
-            .dropDuplicates("_key")
-          val receipts = HeliumGraph.receiptEdges(env)
-            .dropDuplicates("_key")
-          val accounts = HeliumGraph.accountVertices(env)
-          write(payments, "payments", hi)
-          write(receipts, "poc_receipts", hi)
-          write(accounts, "accounts", hi)
-          writeCheckpoint(hi) // checkpoint AFTER sink commit
-          // reference loop housekeeping, post-commit: receipt
-          // retention (follower.py:210-214) and the inventory-lag
-          // refresh trigger (follower.py:61-62)
-          receiptRetentionBlocks.foreach { keep =>
-            Follower.dropExpiredBatches(s"$sinkDir/poc_receipts",
-              hi - keep)
-          }
-          if (Follower.shouldRefreshInventory(hi, inventoryHeight(),
-            inventoryLag)) onInventoryRefresh()
-          Some(hi)
+      source.fetchRange(spark, c, hi).map { env =>
+        HeliumStreamFollower.commitBatch(env, sinkDir, hi, importTarget)
+        Follower.writeCursor(checkpointPath, hi) // AFTER sink commit
+        HeliumStreamFollower.housekeeping(sinkDir, hi,
+          receiptRetentionBlocks, inventoryHeight, onInventoryRefresh,
+          inventoryLag)
+        hi
       }
-    }
-  }
-
-  private def write(df: DataFrame, collection: String, hi: Long): Unit = {
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(s"$sinkDir/$collection/batch=$hi")
-    // the wire verb reads back the committed partition (one cheap
-    // re-scan of batch-sized parquet) so the POSTed documents are
-    // byte-derived from exactly what the store of record holds
-    importTarget.foreach { t =>
-      GraphSink.importBulkPost(
-        spark.read.parquet(s"$sinkDir/$collection/batch=$hi"),
-        t, collection)
     }
   }
 

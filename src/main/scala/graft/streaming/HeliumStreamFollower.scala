@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, max}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 import graft.operators.HeliumGraph
@@ -48,38 +47,42 @@ object HeliumStreamFollower {
 
   /** One epoch's transform + commit — the follower.py:145-207 body
     * over an envelope micro-batch: the three collections, each
-    * content-keyed, in-batch deduped, and committed by epoch
-    * partition overwrite (idempotent under epoch replay).
+    * content-keyed, in-batch deduped, and committed by partition
+    * overwrite under `batch=<hi>` (idempotent under epoch replay), then
+    * the [[housekeeping]]. The one commit both followers run: the
+    * stream passes its epoch's offset-range end ([[epochEndHeight]]) as
+    * `hi`, the driver loop its own cursor `hi` — so partition names,
+    * the retention cutoff and the refresh trigger follow the committed
+    * range even when its tail heights carry no envelope rows. The
+    * driver loop leaves the housekeeping arguments at their no-op
+    * defaults and runs [[housekeeping]] itself after its checkpoint.
     *
     * With an [[GraphSink.ImportTarget]], each committed partition is
-    * read back and POSTed as importBulk bodies from the executors —
-    * the driver loop's wire verb (HeliumFollower.write), same
-    * read-back-what-the-store-holds discipline. A replayed epoch
-    * re-POSTs its partition, which the store's onDuplicate=ignore
-    * absorbs (every document carries its content-hash `_key`) — the
-    * HTTP sink inherits T5 from the key discipline, not from any
-    * sink-side transaction.
+    * read back and POSTed as importBulk bodies from the executors — the
+    * reference's wire verb, byte-derived from exactly what the store of
+    * record holds. A replayed epoch re-POSTs its partition, which the
+    * store's onDuplicate=ignore absorbs (every document carries its
+    * content-hash `_key`) — the HTTP sink inherits T5 from the key
+    * discipline, not from any sink-side transaction.
     *
     * KNOWN parity divergence (pinned by spec, documented by design):
     * when every block of an epoch fails block_get (a node pruned or
     * persistently erroring below its own tip), retry-then-skip leaves
     * an EMPTY envelope — indistinguishable here from a served range
-    * whose blocks carry no transactions. With `epochHi` from the
-    * offsets WAL this path commits an empty `batch=hi` partition and
-    * runs retention/refresh housekeeping (the engine committed the
-    * range, so the cursor semantics say it is processed), while the
-    * driver loop's fetchRange sees no block and commits NOTHING for
-    * the same range. Both are defensible cursor readings; the
-    * streamed one is preferred because an epoch the WAL committed
+    * whose blocks carry no transactions. The stream then commits an
+    * empty `batch=hi` partition and runs the housekeeping (the engine
+    * committed the range, so the cursor semantics say it is processed),
+    * while the driver loop's fetchRange sees no block and commits
+    * NOTHING for the same range. Both are defensible cursor readings;
+    * the streamed one is preferred because an epoch the WAL committed
     * must never be silently un-processed on restart replay.
     */
-  def commitBatch(env: DataFrame, sinkDir: String, batchId: Long,
+  def commitBatch(env: DataFrame, sinkDir: String, hi: Long,
                   importTarget: Option[GraphSink.ImportTarget] = None,
                   receiptRetentionBlocks: Option[Long] = None,
                   inventoryHeight: () => Option[Long] = () => None,
                   onInventoryRefresh: () => Unit = () => (),
-                  inventoryLag: Long = 500L,
-                  epochHi: Option[Long] = None): Unit = {
+                  inventoryLag: Long = 500L): Unit = {
     // ONE source evaluation per epoch: the transforms read the
     // envelope four ways (two payment variants, receipts, accounts),
     // and an un-persisted micro-batch re-runs its partition readers
@@ -96,45 +99,42 @@ object HeliumStreamFollower {
     // site deliberately bypasses the seam.
     val cached = env.persist()
     try {
-      // The epoch's partition name: the engine-committed offset-range
-      // end when the caller threads it through ([[epochEndHeight]] —
-      // the driver loop's own `hi` cursor semantics, including for
-      // epochs whose tail heights carry no envelope rows); data max as
-      // the fallback for direct callers outside a streaming query (the
-      // reference's own per-batch granularity, one driver-side scalar).
-      val hiOpt = epochHi.orElse {
-        val hiRow = cached.agg(max(col("block"))).first()
-        if (hiRow.isNullAt(0)) None else Some(hiRow.getLong(0))
-      }
-      hiOpt.foreach { hi =>
-        val payments = HeliumGraph.paymentV1Edges(cached)
-          .unionByName(HeliumGraph.paymentV2Edges(cached))
-          .dropDuplicates("_key")
-        val receipts = HeliumGraph.receiptEdges(cached)
-          .dropDuplicates("_key")
-        val accounts = HeliumGraph.accountVertices(cached)
-        Seq(payments -> "payments", receipts -> "poc_receipts",
-          accounts -> "accounts").foreach { case (df, c) =>
-          df.write.mode(SaveMode.Overwrite)
-            .parquet(s"$sinkDir/$c/batch=$hi")
-          importTarget.foreach { t =>
-            GraphSink.importBulkPost(
-              env.sparkSession.read.parquet(s"$sinkDir/$c/batch=$hi"),
-              t, c)
-          }
+      val payments = HeliumGraph.paymentV1Edges(cached)
+        .unionByName(HeliumGraph.paymentV2Edges(cached))
+        .dropDuplicates("_key")
+      val receipts = HeliumGraph.receiptEdges(cached)
+        .dropDuplicates("_key")
+      val accounts = HeliumGraph.accountVertices(cached)
+      Seq(payments -> "payments", receipts -> "poc_receipts",
+        accounts -> "accounts").foreach { case (df, c) =>
+        df.write.mode(SaveMode.Overwrite)
+          .parquet(s"$sinkDir/$c/batch=$hi")
+        importTarget.foreach { t =>
+          GraphSink.importBulkPost(
+            env.sparkSession.read.parquet(s"$sinkDir/$c/batch=$hi"),
+            t, c)
         }
-        // reference loop housekeeping, post-commit — the same order
-        // as HeliumFollower.step: receipt retention partition drop
-        // (T7, follower.py:210-214) and the inventory-lag refresh
-        // trigger (T6, follower.py:61-62)
-        receiptRetentionBlocks.foreach { keep =>
-          Follower.dropExpiredBatches(s"$sinkDir/poc_receipts",
-            hi - keep)
-        }
-        if (Follower.shouldRefreshInventory(hi, inventoryHeight(),
-          inventoryLag)) onInventoryRefresh()
       }
     } finally { cached.unpersist(); () }
+    housekeeping(sinkDir, hi, receiptRetentionBlocks, inventoryHeight,
+      onInventoryRefresh, inventoryLag)
+  }
+
+  /** The reference loop's post-commit housekeeping for a batch ending
+    * at `hi`: the receipt retention partition drop (T7,
+    * follower.py:210-214), then the inventory-lag refresh trigger (T6,
+    * follower.py:61-62).
+    */
+  private[streaming] def housekeeping(sinkDir: String, hi: Long,
+                                      receiptRetentionBlocks: Option[Long],
+                                      inventoryHeight: () => Option[Long],
+                                      onInventoryRefresh: () => Unit,
+                                      inventoryLag: Long): Unit = {
+    receiptRetentionBlocks.foreach { keep =>
+      Follower.dropExpiredBatches(s"$sinkDir/poc_receipts", hi - keep)
+    }
+    if (Follower.shouldRefreshInventory(hi, inventoryHeight(),
+      inventoryLag)) onInventoryRefresh()
   }
 
   /** The epoch's committed end height — the (lo, hi] offset-range end
@@ -204,10 +204,9 @@ object HeliumStreamFollower {
       .load()
       .writeStream
       .foreachBatch { (env: DataFrame, batchId: Long) =>
-        commitBatch(env, sinkDir, batchId, importTarget,
-          receiptRetentionBlocks, inventoryHeight, onInventoryRefresh,
-          inventoryLag,
-          epochHi = Some(epochEndHeight(spark, checkpointDir, batchId)))
+        commitBatch(env, sinkDir, epochEndHeight(spark, checkpointDir,
+          batchId), importTarget, receiptRetentionBlocks, inventoryHeight,
+          onInventoryRefresh, inventoryLag)
       }
       .option("checkpointLocation", checkpointDir)
 

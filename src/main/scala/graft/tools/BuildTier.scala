@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Sessions
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only: materialize the DR-2 sf1eq amplification tier to a given
   * directory so the DuckDB oracle can be run against it out-of-JVM —
@@ -15,12 +14,8 @@ import org.apache.spark.sql.SparkSession
 object BuildTier {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-sf1eq")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus)
     ScaleBench.writeAmplified(spark, "/root/testdata/sf0.1", outDir)
     spark.stop()
     println(s"sf1eq tier written to $outDir")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.{Sessions, SparkEntry, Tables}
 
 /** Dev-only plan dumper: write `.explain("formatted")` output for a
@@ -20,11 +19,8 @@ object ExplainQ {
     val sfDir = args(0)
     val outDir = Paths.get(args(2))
     val suffix = args(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus)
     Files.createDirectories(outDir)
     val names =
       if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted

@@ -258,10 +258,7 @@ $body
       .getOrElse("PLANCHECK.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
     val (flagged, errors) = sweep(spark, sfDir)
     spark.stop()
     errors.foreach(e => println(s"FAIL plancheck-error: $e"))

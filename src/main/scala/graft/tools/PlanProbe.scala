@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Sessions
 
 /** Print one query's FINAL adaptive plan — collect() drives the
@@ -12,10 +11,7 @@ import graft.Sessions
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(8)
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val df = graft.SparkEntry.queries(args(0))(spark, sf)
     df.collect() // drive THIS QueryExecution so AQE finalizes in place

@@ -1,16 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.{Sessions, Tables}
 import graft.operators.Dedup
 
 /** Ad-hoc plan/timing probe (not part of the driver contract). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     val docs = Tables.load(spark, "/root/testdata/sf0.1", "documents")
     docs.count()
 

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{Sessions, Tables}
 import graft.operators.Similarity
@@ -24,11 +23,8 @@ object RoundPlan {
     val sfDir = args(0)
     val outDir = Paths.get(args(1))
     val suffix = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus)
     Files.createDirectories(outDir)
     val emb = Tables.load(spark, sfDir, "embeddings")
     for ((name, df) <- Similarity.debugRoundFrames(emb)) {

@@ -505,12 +505,8 @@ object ScaleBench {
               Tables.load(s, dir, "lineitem")))))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus)
 
     val sf1eq = Files.createTempDirectory("graft-sf1eq").toString
     writeAmplified(spark, "/root/testdata/sf0.1", sf1eq)

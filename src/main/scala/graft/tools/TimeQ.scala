@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{Sessions, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 /** Dev-only targeted timer: wall-clock a comma-separated subset of
   * SparkEntry.queries at a given SF dir (noop sink, warm session) —
   * the per-query lens Bench's full sweep is too slow for when
@@ -11,11 +10,8 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus)
     Tables.names.foreach(n => try Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () })
     names.foreach { n =>
       val t0 = System.nanoTime()

@@ -43,6 +43,19 @@ class FollowerSpec extends SparkSpec {
     assert(f.cursor() === 399L)
   }
 
+  test("sync_cursor codec: atomic round trip; a malformed checkpoint " +
+    "names its path and content") {
+    val (_, cp) = freshDirs()
+    assert(Follower.readCursor(cp) === -1L)
+    Follower.writeCursor(cp, 862739L)
+    assert(Follower.readCursor(cp) === 862739L)
+    assert(!Files.exists(java.nio.file.Paths.get(cp + ".tmp")))
+    Files.write(java.nio.file.Paths.get(cp), """{"cursor": 7}""".getBytes)
+    val e = intercept[RuntimeException](Follower.readCursor(cp))
+    assert(e.getMessage.contains(cp))
+    assert(e.getMessage.contains("""{"cursor": 7}"""))
+  }
+
   test("T4: bounded retry succeeds late, then skips on exhaustion") {
     import graft.sources.RetryPolicy.withRetries
     var slept = 0L

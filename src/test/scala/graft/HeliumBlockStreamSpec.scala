@@ -384,6 +384,38 @@ class HeliumBlockStreamSpec extends SparkSpec {
       "paths diverged beyond the documented empty-epoch case")
   }
 
+  test("T4 through the stream reader: a flaky txn is retried, an " +
+    "exhausted one skipped, row-parity with the batch source") {
+    // tx2 succeeds on its 3rd try; tx3 never does within 3 retries
+    StubNode.withServer(flaky = Map("tx2" -> 2, "tx3" -> 99)) { endpoint =>
+      val ckpt = Files.createTempDirectory("hbs-ckpt-t4").toString
+      val q = spark.readStream
+        .format(classOf[HeliumBlockStreamProvider].getName)
+        .option("endpoint", endpoint)
+        .option("startHeight", "99")
+        .option("numPartitions", "2")
+        .option("maxRetries", "3").option("sleepMs", "0")
+        .load()
+        .writeStream.format("memory").queryName("helium_blocks_t4")
+        .option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        val streamed = spark.sql("SELECT * FROM helium_blocks_t4")
+        // the stream consumed tx2's failures, so the serial fetch sees
+        // it succeed at once; tx3 still exhausts its retries
+        val batch = new RpcTxnSource(new JsonRpcClient(endpoint),
+          maxRetries = 3, sleepMs = 0, sleep = _ => ())
+          .fetchRange(spark, 99L, 102L).get
+        assert(envelopeRows(streamed) === envelopeRows(batch))
+        val hashes = streamed.select("hash").collect().map(_.getString(0))
+          .toSet
+        assert(hashes.contains("tx2"), "flaky txn recovered by retry")
+        assert(!hashes.contains("tx3"), "exhausted txn skipped, not fatal")
+      } finally q.stop()
+    }
+  }
+
   test("uncapped: the whole backlog arrives in one micro-batch") {
     StubNode.withServer() { endpoint =>
       val ckpt = Files.createTempDirectory("hbs-ckpt2").toString

@@ -3,7 +3,8 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.operators.HeliumGraph
-import graft.sources.{HeliumFixtures, JsonRpcClient, RpcTxnSource}
+import graft.sources.{HeliumBlockInputPartition, HeliumBlockReaderFactory,
+  HeliumFixtures, JsonRpcClient, RpcTxnSource}
 
 /** End-to-end S1-S3 over a real HTTP round-trip: the StubNode serves
   * the Helium fixtures; the RpcTxnSource must reproduce the fixture
@@ -59,34 +60,30 @@ class JsonRpcSpec extends SparkSpec {
     }
   }
 
-  test("fetchRangeBulk fans the backfill out across partitions") {
-    StubNode.withServer() { endpoint =>
-      val clients = spark.sparkContext.longAccumulator("clients")
-      val calls = spark.sparkContext.longAccumulator("rpc_calls")
-      val mk = () => {
-        clients.add(1)
-        new JsonRpcClient(endpoint, (e, b) => {
-          calls.add(1); JsonRpcClient.httpPost(e, b)
-        })
+  test("the DSv2 reader fans the backfill out across partitions") {
+    StubNode.withServerCounts { (endpoint, requests) =>
+      // three one-height slices of (99, 102], each read through the
+      // executor-side reader exactly as a stream task reads it
+      val factory = new HeliumBlockReaderFactory
+      val streamed = (99L until 102L).flatMap { lo =>
+        val r = factory.createReader(HeliumBlockInputPartition(lo, lo + 1,
+          endpoint, maxRetries = 2, sleepMs = 0))
+        try Iterator.continually(r.next()).takeWhile(identity).map { _ =>
+          val row = r.get()
+          Seq(row.getLong(0), row.getLong(1), row.getUTF8String(2),
+            row.getUTF8String(3), row.getUTF8String(4)).mkString("|")
+        }.toVector
+        finally r.close()
       }
-      val bulk = RpcTxnSource.fetchRangeBulk(spark, mk, 99L, 102L,
-        numPartitions = 3, maxRetries = 2, sleepMs = 0, sleep = _ => ())
+      // one RPC per block and per listed txn
+      assert(requests("block_get") === 3L)
+      assert(requests("transaction_get") === 6L)
       val serial = new RpcTxnSource(new JsonRpcClient(endpoint),
         maxRetries = 2, sleepMs = 0, sleep = _ => ())
         .fetchRange(spark, 99L, 102L).get
-      // identical envelope set to the serial path (ONE action on bulk,
-      // so the accumulators below count a single execution)
-      def metaSet(d: org.apache.spark.sql.DataFrame) =
-        d.select("block", "block_time", "hash", "type")
-          .collect().map(_.toSeq).toSet
-      val bulkMeta = metaSet(bulk)
-      assert(bulkMeta === metaSet(serial))
-      assert(bulkMeta.size === 6)
-      // one client per non-empty height slice (3 heights → 3 slices),
-      // and every slice actually issued RPCs from its own task
-      assert(clients.value === 3L)
-      // 3 block_gets + 6 transaction_gets, spread across the slices
-      assert(calls.value === 9L)
+        .collect().map(_.toSeq.mkString("|")).toVector
+      assert(streamed.sorted === serial.sorted)
+      assert(streamed.size === 6)
     }
   }
 

@@ -45,7 +45,7 @@ object StubNode {
                            extraPayloads: Map[String, String] = Map.empty)(
       f: (String, java.util.Queue[(String, String)]) => A): A =
     withServerCore(flaky, tipCap, extraBlocks, prunedHeights,
-      extraPayloads) { (endpoint, imports, _) => f(endpoint, imports) }
+      extraPayloads) { (endpoint, imports, _, _) => f(endpoint, imports) }
 
   /** Variant exposing the tip as a MUTABLE AtomicLong (initially
     * `tipCap`): FollowerBench's tail mode advances it one height at a
@@ -58,7 +58,17 @@ object StubNode {
                        extraPayloads: Map[String, String] = Map.empty)(
       f: (String, java.util.concurrent.atomic.AtomicLong) => A): A =
     withServerCore(Map.empty, tipCap, extraBlocks, Set.empty,
-      extraPayloads) { (endpoint, _, tip) => f(endpoint, tip) }
+      extraPayloads) { (endpoint, _, tip, _) => f(endpoint, tip) }
+
+  /** Variant that also counts the JSON-RPC requests served so far, per
+    * method (`requests("block_get")`), so specs can pin exactly how
+    * many RPCs a fetch path issues.
+    */
+  def withServerCounts[A](f: (String, String => Long) => A): A =
+    withServerCore(Map.empty, Long.MaxValue, Map.empty, Set.empty,
+      Map.empty) {
+      (endpoint, _, _, requests) => f(endpoint, requests)
+    }
 
   private def withServerCore[A](flaky: Map[String, Int],
                                 tipCap: Long,
@@ -66,7 +76,7 @@ object StubNode {
                                 prunedHeights: Set[Long],
                                 extraPayloads: Map[String, String])(
       f: (String, java.util.Queue[(String, String)],
-          java.util.concurrent.atomic.AtomicLong) => A): A = {
+          java.util.concurrent.atomic.AtomicLong, String => Long) => A): A = {
     val tip = new java.util.concurrent.atomic.AtomicLong(tipCap)
     val blocks = HeliumFixtures.blockJsonByHeight ++ extraBlocks
     val payloads = HeliumFixtures.payloadByHash ++ extraPayloads
@@ -74,6 +84,8 @@ object StubNode {
     val flakyRemaining = new java.util.concurrent.ConcurrentHashMap[String, Integer]
     flaky.foreach { case (k, v) => flakyRemaining.put(k, v) }
     val imports = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val served = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.LongAdder]
 
     def handle(ex: HttpExchange): Unit = {
       val raw = new String(
@@ -107,6 +119,8 @@ object StubNode {
       }
       val req = mapper.readTree(raw)
       val id = req.get("id").asLong()
+      served.computeIfAbsent(req.get("method").asText(),
+        _ => new java.util.concurrent.atomic.LongAdder).increment()
       val result: Either[Int, String] = req.get("method").asText() match {
         case "block_height" =>
           Right(math.min(
@@ -143,7 +157,10 @@ object StubNode {
     val pool = java.util.concurrent.Executors.newCachedThreadPool()
     server.setExecutor(pool)
     server.start()
-    try f(s"http://127.0.0.1:${server.getAddress.getPort}/", imports, tip)
+    val requests = (method: String) =>
+      Option(served.get(method)).fold(0L)(_.sum())
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}/", imports, tip,
+      requests)
     finally { server.stop(0); pool.shutdown() }
   }
 }
